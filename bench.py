@@ -47,59 +47,15 @@ def main() -> int:
 
     # Session-memo attribution (VERDICT r7 ask #6): some queries share an
     # expensive memoized frame (k-means chain, SemDeDup keep artifact,
-    # near-dup clusters, co-occurrence edges, LSH/SimHash pair frames);
-    # whichever consumer runs FIRST pays the build. Instrument the memo
-    # dicts so each
-    # per-query line records whether it built a memo ("cold"), rode one
-    # ("warm"), or touched none — cross-round per-query deltas must
-    # compare like with like.
-    class _CountingCache(dict):
-        def __init__(self) -> None:
-            super().__init__()
-            self.hits = 0
-            self.inserts = 0
-
-        def get(self, key, default=None):
-            val = super().get(key, default)
-            if val is not None:
-                self.hits += 1
-            return val
-
-        def __getitem__(self, key):
-            val = super().__getitem__(key)
-            self.hits += 1
-            return val
-
-        def __setitem__(self, key, val) -> None:
-            self.inserts += 1
-            super().__setitem__(key, val)
-
-    from cl_tagger_batch_processing_spark.operators import dedup as _dedup
-    from cl_tagger_batch_processing_spark.operators import graph as _graph
-    from cl_tagger_batch_processing_spark.operators import relational as _rel
-    from cl_tagger_batch_processing_spark.operators import similarity as _sim
-
-    memo_caches: list[_CountingCache] = []
-    for mod, attr in [
-        (_rel, "_PART_PAIRS_CACHE"),
-        (_sim, "_TOPK_COSINE_CACHE"),
-        (_sim, "_KMEANS_CACHE"),
-        (_sim, "_SEMANTIC_KEEP_CACHE"),
-        (_sim, "_KNN_GRAPH_CACHE"),
-        (_dedup, "_CLUSTERS_CACHE"),
-        (_dedup, "_LSH_PAIRS_CACHE"),
-        (_dedup, "_SIMHASH_PAIRS_CACHE"),
-        (_dedup, "_SIG_CACHE"),
-        (_graph, "_EDGES_CACHE"),
-    ]:
-        cache = _CountingCache()
-        setattr(mod, attr, cache)
-        memo_caches.append(cache)
+    # near-dup clusters, co-occurrence edges, table plans, ...); whichever
+    # consumer runs FIRST pays the build. Each per-query line records
+    # whether it built a memo ("cold"), rode one ("warm"), or touched none
+    # — cross-round per-query deltas must compare like with like.
+    from cl_tagger_batch_processing_spark.checkpointing import MEMO_COUNTS
 
     def run_once(name: str, fn) -> tuple[float, str | None]:
         """Time one noop-write materialization; classify memo interaction."""
-        hits0 = sum(c.hits for c in memo_caches)
-        ins0 = sum(c.inserts for c in memo_caches)
+        builds0, hits0 = MEMO_COUNTS["builds"], MEMO_COUNTS["hits"]
         t0 = time.perf_counter()
         try:
             df = fn(spark, sf_dir)
@@ -108,9 +64,9 @@ def main() -> int:
         except Exception as e:  # a failing query must not sink the whole bench
             print(f"# bench error in {name}: {e}", file=sys.stderr)
             return -1.0, None
-        if sum(c.inserts for c in memo_caches) > ins0:
+        if MEMO_COUNTS["builds"] > builds0:
             return sec, "cold"  # built (at least one) shared memo
-        if sum(c.hits for c in memo_caches) > hits0:
+        if MEMO_COUNTS["hits"] > hits0:
             return sec, "warm"  # rode a memo another query built
         return sec, None
 

@@ -29,15 +29,23 @@ changes::
 ``spark.cl_tagger.checkpoint.dir`` seeds ``SparkContext.setCheckpointDir``
 once per session (an already-set checkpoint dir wins, so programmatic
 ``setCheckpointDir`` calls are respected).
+
+``session_memo`` is the one session memo for frames several queries share
+(checkpointed pair/edge/cluster frames, k-means state, table plans); its
+key ends in the checkpoint mode.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections import Counter
+from typing import Callable, TypeVar
+
+from pyspark.sql import DataFrame, SparkSession
 
 CHECKPOINT_MODE_CONF = "spark.cl_tagger.checkpoint.mode"
 CHECKPOINT_DIR_CONF = "spark.cl_tagger.checkpoint.dir"
 _MODES = ("local", "reliable")
+T = TypeVar("T")
 
 
 def truncate_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -137,24 +145,72 @@ def checkpoint_with_metric(df: DataFrame, metric, *extra_metrics):
     return ck, vals
 
 
-def session_cache_sweep(cache: dict, app_id: str) -> None:
-    """Evict entries belonging to any OTHER Spark application from an
-    applicationId-keyed DataFrame memo (the session-scoped cache pattern
-    shared by the k-means chain, the SemDeDup keep artifact, and the
-    near-dup cluster assignment): a cached plan is only valid inside the
-    application that built it, and the applicationId key makes staleness
-    structurally impossible rather than time-based.
+# Every memo dict ``session_memo`` has served, in first-served order: the
+# clear path walks it, so no caller keeps its own list of memos. A list, not
+# a dict, so it never reads as a memo itself.
+_SERVED_MEMOS: list[dict] = []
+# Builds and hits across every memo, for per-query cold/warm accounting.
+MEMO_COUNTS: Counter = Counter(builds=0, hits=0)
 
-    Shared contract of every cache swept here (r10 ADVICE, documented
-    once): keys carry ``sf_dir`` but no data-version component, so the
-    memo assumes the fixture directory is IMMUTABLE for the lifetime of
-    the application — true for the read-only ``/root/testdata`` fixtures
-    and for any production run over immutable snapshot paths; a pipeline
-    that rewrites a path in place must key on a snapshot/version id
-    instead. Cached ``localCheckpoint`` blocks live until application
-    exit by design: each memo holds O(pairs/centroids) rows, bounded far
-    below executor storage at any fixture scale, and the blocks ARE the
-    saving (every consumer re-reads them instead of re-running the
-    build)."""
-    for key in [k for k in cache if k[0] != app_id]:
-        del cache[key]
+
+def session_memo(spark: SparkSession, cache: dict, key: tuple, build: Callable[[], T]) -> T:
+    """THE session memo: return ``cache``'s entry for ``key`` in this Spark
+    application and checkpoint mode, calling ``build()`` and storing its
+    result on a miss. Every family-shared frame (MinHash signatures and
+    pairs, k-means, co-occurrence edges, table plans, ...) goes through
+    here, so key rule, eviction and accounting are written once.
+
+    The full key is ``(applicationId, *key, checkpoint_mode)``:
+
+    * ``applicationId`` — a cached plan is only valid inside the
+      application that built it. Entries of every OTHER application are
+      evicted on each call, so a stop/recreate cycle frees the dead
+      application's checkpoint blocks instead of pinning them, and a
+      recreated session never receives frames bound to a dead one
+      (``id(spark)`` would not do: CPython reuses object ids).
+    * the checkpoint mode — a reliable-mode call never reuses a
+      local-mode checkpoint (and vice versa), so the reliable-vs-local
+      equality tests compute both variants for real.
+
+    Contract shared by every memo:
+
+    * ``key`` carries ``sf_dir`` but no data-version component: the
+      fixture directory must be IMMUTABLE for the application's lifetime
+      (true for read-only fixtures and immutable snapshot paths; a
+      pipeline that rewrites a path in place must key on a snapshot id).
+    * Checkpoint blocks of a memoized frame are held until the
+      application exits, by design: each memo holds O(pairs/centroids)
+      rows, far below executor storage, and the blocks ARE the saving.
+    * Memoized checkpointed frames are already lineage-truncated: callers
+      must NOT re-truncate them. Checkpointed frames lose stats, so a
+      consumer joining one should rely on AQE's runtime sizing or hint
+      broadcast.
+    * Every call with one key returns the SAME ``DataFrame`` instance. A
+      consumer that joins a memoized frame with a frame derived from it
+      shares column lineage on both sides: join on string column names
+      or ``.alias()`` both sides, never on ``df[col]`` references.
+
+    ``cache`` is the caller's module-level dict, passed at call time
+    (instrumentation may swap the module attribute for a counting copy).
+    """
+    app_id = spark.sparkContext.applicationId
+    full_key = (app_id, *key, spark.conf.get(CHECKPOINT_MODE_CONF, "local"))
+    for stale in [k for k in cache if k[0] != app_id]:
+        del cache[stale]
+    if not any(d is cache for d in _SERVED_MEMOS):
+        _SERVED_MEMOS.append(cache)
+    hit = cache.get(full_key)
+    if hit is not None:
+        MEMO_COUNTS["hits"] += 1
+        return hit
+    out = build()
+    cache[full_key] = out
+    MEMO_COUNTS["builds"] += 1
+    return out
+
+
+def clear_session_memos() -> None:
+    """Empty every memo dict ``session_memo`` has served, so the next call
+    of each memo builds again (isolated cold-vs-cold timing)."""
+    for cache in _SERVED_MEMOS:
+        cache.clear()

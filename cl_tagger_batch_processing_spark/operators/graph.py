@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..checkpointing import truncate_lineage, truncate_lineage_eager
+from ..checkpointing import session_memo, truncate_lineage, truncate_lineage_eager
 from ..sources.tables import load_table
 
 PR_SCALE = 10**15  # rank unit: 1e-15 (bigint-exact; total mass 1e15 ≪ 2^63)
@@ -74,30 +74,18 @@ def cooccurrence_edges(
     bounded basket self-join) symmetrized. Edge generation is linear in
     order count; the support filter prunes noise edges.
 
-    MATERIALIZED once and memoized per (application, sf_dir, min_support,
-    checkpoint-mode) — the dedup_clusters memo convention: ten graph-family
-    queries consume this same relation and the basket self-join is their
-    dominant shared cost. Callers therefore must NOT re-truncate it."""
-    from ..checkpointing import CHECKPOINT_MODE_CONF, session_cache_sweep
+    MATERIALIZED once and memoized per (sf_dir, min_support) through
+    ``session_memo``: ten graph-family queries consume this same relation
+    and the basket self-join is their dominant shared cost."""
     from .relational import counted_part_pairs
 
-    app_id = spark.sparkContext.applicationId
-    key = (
-        app_id,
-        sf_dir,
-        min_support,
-        spark.conf.get(CHECKPOINT_MODE_CONF, "local"),
-    )
-    session_cache_sweep(_EDGES_CACHE, app_id)
-    hit = _EDGES_CACHE.get(key)
-    if hit is not None:
-        return hit
-    pairs = counted_part_pairs(spark, sf_dir, min_support=min_support)
-    fwd = pairs.select(F.col("part_a").alias("src"), F.col("part_b").alias("dst"))
-    rev = pairs.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-    out = fwd.unionByName(rev).transform(truncate_lineage_eager)
-    _EDGES_CACHE[key] = out
-    return out
+    def build() -> DataFrame:
+        pairs = counted_part_pairs(spark, sf_dir, min_support=min_support)
+        fwd = pairs.select(F.col("part_a").alias("src"), F.col("part_b").alias("dst"))
+        rev = pairs.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
+        return fwd.unionByName(rev).transform(truncate_lineage_eager)
+
+    return session_memo(spark, _EDGES_CACHE, (sf_dir, min_support), build)
 
 
 def graph_pagerank(

@@ -19,6 +19,9 @@ import pytest
 from cl_tagger_batch_processing_spark.checkpointing import (
     CHECKPOINT_DIR_CONF,
     CHECKPOINT_MODE_CONF,
+    MEMO_COUNTS,
+    clear_session_memos,
+    session_memo,
     truncate_lineage,
 )
 
@@ -96,3 +99,55 @@ def test_cc_loop_identical_in_reliable_mode(spark, sf_dir, reliable_mode):
     spark.conf.set(CHECKPOINT_MODE_CONF, "local")
     local = _rows(dedup_clusters(spark, sf_dir))
     assert reliable == local
+
+
+def test_kmeans_memo_keyed_on_checkpoint_mode(spark, sf_dir, reliable_mode):
+    """A reliable-mode k-means must not reuse the local-mode checkpoint:
+    the memo key ends in the checkpoint mode, so the reliable call adds
+    its own entry — and computes the same assignment."""
+    from cl_tagger_batch_processing_spark.operators import similarity
+
+    spark.conf.set(CHECKPOINT_MODE_CONF, "local")
+    local = _rows(similarity.embedding_kmeans(spark, sf_dir))
+    n_local = len(similarity._KMEANS_CACHE)
+    spark.conf.set(CHECKPOINT_MODE_CONF, "reliable")
+    reliable = _rows(similarity.embedding_kmeans(spark, sf_dir))
+    assert len(similarity._KMEANS_CACHE) == n_local + 1
+    assert reliable == local
+
+
+def test_session_memo_key_hit_and_clear(spark, sf_dir):
+    from cl_tagger_batch_processing_spark.sources import tables
+
+    app_id = spark.sparkContext.applicationId
+    cache: dict = {}
+    built: list[str] = []
+
+    def build(tag):
+        def _build():
+            built.append(tag)
+            return object()
+
+        return _build
+
+    builds0, hits0 = MEMO_COUNTS["builds"], MEMO_COUNTS["hits"]
+    first = session_memo(spark, cache, ("x", 1), build("a"))
+    assert list(cache) == [(app_id, "x", 1, "local")]
+    assert MEMO_COUNTS["builds"] == builds0 + 1
+    # same key: the same object, one hit, no build
+    assert session_memo(spark, cache, ("x", 1), build("b")) is first
+    assert (MEMO_COUNTS["builds"], MEMO_COUNTS["hits"]) == (builds0 + 1, hits0 + 1)
+    # distinct parameters: a distinct entry
+    assert session_memo(spark, cache, ("x", 2), build("c")) is not first
+    assert len(cache) == 2 and built == ["a", "c"]
+    # another application's entries are evicted on the next call
+    cache[("dead-app", "x", 1, "local")] = object()
+    session_memo(spark, cache, ("x", 1), build("d"))
+    assert all(k[0] == app_id for k in cache)
+    # the clear path empties every dict served, module memos included
+    tables.load_table(spark, sf_dir, "region")
+    clear_session_memos()
+    assert cache == {} and tables._TABLE_PLAN_CACHE == {}
+    builds1 = MEMO_COUNTS["builds"]
+    session_memo(spark, cache, ("x", 1), build("e"))
+    assert MEMO_COUNTS["builds"] == builds1 + 1 and built[-1] == "e"

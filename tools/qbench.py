@@ -14,7 +14,7 @@ AQE's final plan is what lands in the file.
 Each run is tagged with its own Spark job group so the output reports the
 NUMBER OF SPARK JOBS the run launched — the measurement the iterative-
 family optimizations (fewer checkpoint/census jobs per superstep) are
-graded on. Session memo caches (the bench.py cold/warm list) are cleared
+graded on. Every session memo (``checkpointing.session_memo``) is cleared
 before every timed run by default so isolated medians compare cold against
 cold; pass --keep-memos for bench-like warm riding.
 """
@@ -26,34 +26,6 @@ import json
 import os
 import sys
 import time
-
-
-def _memo_caches():
-    """The session memo dicts bench.py instruments — cleared per run so
-    every isolated run pays its own memo builds (cold-vs-cold A/B)."""
-    from cl_tagger_batch_processing_spark.operators import dedup as _dedup
-    from cl_tagger_batch_processing_spark.operators import graph as _graph
-    from cl_tagger_batch_processing_spark.operators import relational as _rel
-    from cl_tagger_batch_processing_spark.operators import similarity as _sim
-
-    out = []
-    for mod, attr in [
-        (_rel, "_PART_PAIRS_CACHE"),
-        (_sim, "_TOPK_COSINE_CACHE"),
-        (_sim, "_KMEANS_CACHE"),
-        (_sim, "_SEMANTIC_KEEP_CACHE"),
-        (_sim, "_KNN_GRAPH_CACHE"),
-        (_sim, "_INTRINSIC_CAND_CACHE"),
-        (_dedup, "_CLUSTERS_CACHE"),
-        (_dedup, "_LSH_PAIRS_CACHE"),
-        (_dedup, "_SIMHASH_PAIRS_CACHE"),
-        (_dedup, "_SIG_CACHE"),
-        (_graph, "_EDGES_CACHE"),
-    ]:
-        cache = getattr(mod, attr, None)
-        if isinstance(cache, dict):
-            out.append(cache)
-    return out
 
 
 def main() -> int:
@@ -76,6 +48,7 @@ def main() -> int:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from cl_tagger_batch_processing_spark.checkpointing import clear_session_memos
     from cl_tagger_batch_processing_spark.plans.inspect import (
         count_shuffles,
         formatted_plan,
@@ -88,7 +61,6 @@ def main() -> int:
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warm
-    caches = _memo_caches()
     qmap = queries()
     for name in args.queries:
         fn = qmap[name]
@@ -96,8 +68,7 @@ def main() -> int:
         job_counts: list[int] = []
         for i in range(max(args.runs, 0)):
             if not args.keep_memos:
-                for c in caches:
-                    c.clear()
+                clear_session_memos()
             group = f"qbench:{name}:{i}"
             sc.setJobGroup(group, f"qbench {name} run {i}")
             t0 = time.perf_counter()
@@ -115,8 +86,7 @@ def main() -> int:
         if args.plans_dir:
             os.makedirs(args.plans_dir, exist_ok=True)
             if not args.keep_memos:
-                for c in caches:
-                    c.clear()
+                clear_session_memos()
             sc.setJobGroup(f"qbench:{name}:plan", f"qbench {name} plan")
             df = fn(spark, sf_dir)
             if not times:
